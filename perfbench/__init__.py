@@ -1,0 +1,1 @@
+"""Seeded end-to-end and per-layer benchmark; entry point: run.py."""
