@@ -28,7 +28,6 @@ from go_log_forwarder_spark.operators.aggregate import (
     per_sink_counts,
     per_sink_source_counts,
     pipeline_metrics,
-    pipeline_metrics_single_scan,
 )
 from go_log_forwarder_spark.functions import dedup as dd
 from go_log_forwarder_spark.functions import multimodal as mm
@@ -176,13 +175,10 @@ def q_json_parse_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 pipeline metrics per source: rows in/parsed/dropped/routed.
-
-    Round 7: the single-scan conditional-aggregation form — the
-    three-frame formulation re-parsed the pipeline once per metric
-    family (guide §2.4: don't pay the same pass three times)."""
+    """A2 pipeline metrics per source: rows in/parsed/dropped/routed, in
+    one scan of the parse pipeline."""
     parsed = _parsed(spark, sf_dir)
-    return pipeline_metrics_single_scan(parsed, GREP.keep_pred(), SINKS)
+    return pipeline_metrics(parsed, GREP.keep_pred(), SINKS)
 
 
 def q_routed_rows_err_sink(spark: SparkSession, sf_dir: str) -> DataFrame:

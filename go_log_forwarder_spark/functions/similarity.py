@@ -15,7 +15,6 @@ All pure Catalyst (zip_with/aggregate) — no Python in the hot path.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -39,28 +38,6 @@ def int_dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("bigint"), lambda acc, x: acc + x
     )
-
-
-def int_dot_arrow(a: Column, b: Column) -> Column:
-    """Vectorized twin of :func:`int_dot` (round 7): the Catalyst
-    zip_with+aggregate pair is interpreted per element, which dominates
-    high-fanout join outputs (the IVF assignment and hot-bucket
-    sub-assignment evaluate one dot per (vector, centroid/seed) pair).
-    Batches cross as Arrow and the products are one int64 einsum — same
-    wrap-around int64 arithmetic, bit-identical results (pinned in
-    tests/test_tokenops.py::test_int_dot_arrow_parity)."""
-
-    @F.pandas_udf("bigint")
-    def _dot(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(xs) == 0:
-            return pd.Series([], dtype="int64")
-        A = np.stack([np.asarray(v, dtype=np.int64) for v in xs])
-        B = np.stack([np.asarray(v, dtype=np.int64) for v in ys])
-        return pd.Series(np.einsum("ij,ij->i", A, B))
-
-    return _dot(a, b)
 
 
 def cosine_col(qa: Column, qb: Column) -> Column:
@@ -378,7 +355,7 @@ def split_hot_buckets(
         seed_rel = F.broadcast(seeds) if n_seeds <= seed_broadcast_rows else seeds
         cand = assigned.join(seed_rel, ["centroid", "sub"]).withColumn(
             "_sdist",
-            F.col("norm2") + F.col("_sn") - 2 * int_dot_arrow(F.col("v"), F.col("_sv")),
+            F.col("norm2") + F.col("_sn") - 2 * int_dot(F.col("v"), F.col("_sv")),
         )
         # keyed by (id, centroid), not id alone: under multi-probe
         # assignment a vector has one membership row PER probed bucket,
@@ -518,7 +495,7 @@ def ivf_assign(
             )
         )
     joined = qz.join(F.broadcast(cents)).withColumn(
-        "dist", F.col("norm2") + F.col("cn") - 2 * int_dot_arrow(F.col("v"), F.col("cv"))
+        "dist", F.col("norm2") + F.col("cn") - 2 * int_dot(F.col("v"), F.col("cv"))
     )
     if nprobe == 1:
         # min_by over a (dist, cidx) struct = the same argmin + tie-break as

@@ -59,10 +59,6 @@ def route_exploded(df: DataFrame, sinks: list[SinkSpec], tag_col: str = "tag") -
     return df.withColumn("sink", F.explode(matched))
 
 
-def sink_predicates(sinks: list[SinkSpec], tag_col: str = "tag") -> dict[str, F.Column]:
-    return {s.name: s.compiled.column(F.col(tag_col)) for s in sinks}
-
-
 def fan_out_writes(
     df: DataFrame,
     sinks: list[SinkSpec],

@@ -5,17 +5,16 @@ every 100 ms (internal/input/tail/repository.go:50-120, tail.go:473-497) and
 seeks to the saved offset on restart (tail.go:418) — at-least-once. This
 engine is strictly stronger (exactly-once across retries):
 
-- **Work unit** = input file (the file-scan task granule; at 10^12 rows an
-  Iceberg scan-task manifest plays the same role). The unit list comes from
-  the filesystem/manifest, never from scanning row data.
+- **Work unit** = input file (the file-scan task granule). The unit list
+  comes from the filesystem listing, never from scanning row data.
 - **Idempotent output**: each run processes ALL uncommitted units in ONE
   Spark job and writes every sink partitioned by unit with dynamic partition
   overwrite — a retried unit replaces its own output, never duplicates it.
 - **Atomic lineage commit**: after the sink writes succeed, one lineage row
   per unit (run_id, unit, rows_in/parsed/dropped/routed, status, ts) is
-  committed via temp+rename JSON — the parquet-manifest analog of an Iceberg
-  snapshot commit. Crash before the commit -> the unit is reprocessed and
-  its output overwritten (no dup, no loss). Crash after -> it is skipped.
+  committed via temp+rename JSON (:class:`LineageStore`, one file per
+  unit). Crash before the commit -> the unit is reprocessed and its output
+  overwritten (no dup, no loss). Crash after -> it is skipped.
 - **Resume** = anti-join of the unit list against committed lineage
   (a driver-side set difference over file names — partition pruning happens
   BEFORE any data is read, mirroring the offset seek).
@@ -34,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.routing import SinkSpec
-from ..sources.storage import ParquetSnapshotStore
 
 UNIT_COL = "_unit"
 
@@ -78,7 +76,7 @@ class LineageStore:
     def _run_dir(self, run_id: str) -> str:
         return os.path.join(self.base, run_id)
 
-    def committed(self, run_id: str, spark: SparkSession | None = None) -> dict[str, dict]:
+    def committed(self, run_id: str) -> dict[str, dict]:
         d = self._run_dir(run_id)
         if not os.path.isdir(d):
             return {}
@@ -121,80 +119,6 @@ class LineageStore:
         return spark.createDataFrame(rows, _METRICS_SCHEMA)
 
 
-class TableLineageStore:
-    """Lineage as an append-only parquet-manifest TABLE (the Iceberg shape;
-    SURVEY §7.0): every commit/invalidation appends one atomic snapshot via
-    :class:`ParquetSnapshotStore`; a unit's state is its LATEST row
-    (invalidations are tombstone rows with status='invalidated'). On a real
-    cluster this is a config-only swap to Iceberg appends — same interface
-    as :class:`LineageStore`."""
-
-    TABLE = "lineage"
-    _SCHEMA = (
-        "run_id string, unit string, rows_in long, rows_parsed long, "
-        "rows_dropped long, rows_routed long, status string, "
-        "committed_at double, unit_size long, unit_mtime_ns long"
-    )
-
-    def __init__(self, spark: SparkSession, base: str):
-        self.spark = spark
-        self.store = ParquetSnapshotStore(base)
-
-    def _latest(self, run_id: str) -> DataFrame | None:
-        df = self.store.read(self.spark, self.TABLE)
-        if df is None:
-            return None
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("unit").orderBy(F.desc("committed_at"))
-        return (
-            df.filter(F.col("run_id") == run_id)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
-    def committed(self, run_id: str, spark: SparkSession | None = None) -> dict[str, dict]:
-        latest = self._latest(run_id)
-        if latest is None:
-            return {}
-        return {
-            r["unit"]: r.asDict()
-            for r in latest.filter(F.col("status") == "committed").collect()
-        }
-
-    def commit(self, run_id: str, records: list[dict]) -> None:
-        rows = [
-            (
-                rec["run_id"], rec["unit"], rec["rows_in"], rec["rows_parsed"],
-                rec["rows_dropped"], rec["rows_routed"], rec["status"],
-                rec["committed_at"], rec.get("unit_size"), rec.get("unit_mtime_ns"),
-            )
-            for rec in records
-        ]
-        self.store.append(self.spark.createDataFrame(rows, self._SCHEMA), self.TABLE)
-
-    def invalidate(self, run_id: str, unit: str) -> None:
-        self.commit(
-            run_id,
-            [
-                {
-                    "run_id": run_id, "unit": unit, "rows_in": 0, "rows_parsed": 0,
-                    "rows_dropped": 0, "rows_routed": 0, "status": "invalidated",
-                    "committed_at": time.time(), "unit_size": None,
-                    "unit_mtime_ns": None,
-                }
-            ],
-        )
-
-    def metrics_df(self, spark: SparkSession, run_id: str) -> DataFrame:
-        latest = self._latest(run_id)
-        cols = [c.strip().split(" ")[0] for c in _METRICS_SCHEMA.split(",")]
-        if latest is None:
-            return spark.createDataFrame([], _METRICS_SCHEMA)
-        return latest.filter(F.col("status") == "committed").select(*cols)
-
-
 class ResumablePipeline:
     """Exactly-once resumable pipeline runner over file-unit granules.
 
@@ -202,12 +126,10 @@ class ResumablePipeline:
     sinks receive ``kept_df`` rows whose tag matches their pattern.
     """
 
-    def __init__(self, work_dir: str, sinks: list[SinkSpec], lineage=None):
+    def __init__(self, work_dir: str, sinks: list[SinkSpec]):
         self.work_dir = work_dir
         self.sinks = sinks
-        # default: filesystem JSON store; pass a TableLineageStore for the
-        # parquet-manifest (Iceberg-shaped) variant — same interface
-        self.lineage = lineage or LineageStore(os.path.join(work_dir, "_lineage"))
+        self.lineage = LineageStore(os.path.join(work_dir, "_lineage"))
 
     def _sink_dir(self, sink: SinkSpec) -> str:
         return os.path.join(self.work_dir, "sinks", sink.name)
@@ -240,7 +162,7 @@ class ResumablePipeline:
         # read past the new EOF (cheap: metadata only)
         spark.catalog.refreshByPath(input_path)
         units = self.list_units(spark, input_path)
-        committed = self.lineage.committed(run_id, spark)
+        committed = self.lineage.committed(run_id)
         # truncation/replacement reset (tail.go:409-415: offset > size ->
         # seek 0), generalized: a committed unit whose file CHANGED since
         # commit — shrunk, grew (append), or was replaced in place (size

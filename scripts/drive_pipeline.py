@@ -8,7 +8,7 @@ from go_log_forwarder_spark.functions.enrich import broadcast_enrich
 from go_log_forwarder_spark.operators.routing import SinkSpec, fan_out_writes
 from go_log_forwarder_spark.operators.aggregate import per_sink_counts, pipeline_metrics
 
-spark = get_spark(master="local[8]")
+spark = get_spark()  # local[$SPARK_GRAFT_CPUS]
 ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
 # ingest: props is the raw JSON log line; tag derived from event_type; source from user_id
 df = ev.select(
@@ -19,7 +19,8 @@ df = ev.select(
     "event_id",
 )
 parsed = ParserChain([JsonParser(), RegexParser(pattern=r"^(?P<level>[A-Z]+) (?P<msg>.+)$")]).apply(df)
-kept = GrepFilter(op="and", include=('"k":[0-9]+',), match="evt-*").apply(parsed)
+grep = GrepFilter(op="and", include=('"k":[0-9]+',), match="evt-*")
+kept = grep.apply(parsed)
 lookup = spark.createDataFrame(
     [("src0", "team-a"), ("src1", "team-b"), ("src2", "team-c")], "source string, team string")
 enriched = broadcast_enrich(kept, lookup)
@@ -33,7 +34,7 @@ print("fan_out counts:", counts)
 print("per_sink_counts:")
 per_sink_counts(enriched, sinks).orderBy("sink_name").show()
 print("metrics:")
-pipeline_metrics(parsed, kept, sinks).orderBy("source").show()
+pipeline_metrics(parsed, grep.keep_pred(), sinks).orderBy("source").show()
 # re-read a sink from disk (real surface: parquet written by the writes)
 back = spark.read.parquet(os.path.join(out, "errors"))
 print("errors sink rows on disk:", back.count(), "distinct tags:", [r[0] for r in back.select("tag").distinct().collect()])

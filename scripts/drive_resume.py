@@ -1,5 +1,5 @@
-"""End-to-end drive: crash-resume on real events data + streaming restart."""
-import tempfile, os, datetime
+"""End-to-end drive: crash, resume and rerun a ResumablePipeline on real events data."""
+import tempfile, os
 from pyspark.sql import functions as F
 from go_log_forwarder_spark.session import get_spark
 from go_log_forwarder_spark.functions.parsers import JsonParser, ParserChain
@@ -7,7 +7,7 @@ from go_log_forwarder_spark.functions.filters import GrepFilter
 from go_log_forwarder_spark.operators.routing import SinkSpec
 from go_log_forwarder_spark.plans.lineage import ResumablePipeline
 
-spark = get_spark(master="local[8]")
+spark = get_spark()  # local[$SPARK_GRAFT_CPUS]
 tmp = tempfile.mkdtemp(prefix="glfs_resume_")
 ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
 inp = os.path.join(tmp, "in")

@@ -114,8 +114,8 @@ def test_per_sink_source_counts(spark, pipeline_df):
 
 
 def test_pipeline_metrics_invariants(spark, pipeline_df):
-    parsed, kept = pipeline_df
-    m = {r["source"]: r for r in pipeline_metrics(parsed, kept, SINKS).collect()}
+    parsed, _ = pipeline_df
+    m = {r["source"]: r for r in pipeline_metrics(parsed, GREP.keep_pred(), SINKS).collect()}
     total_in = sum(r["rows_in"] for r in m.values())
     assert total_in == 300
     for source, r in m.items():
@@ -124,6 +124,12 @@ def test_pipeline_metrics_invariants(spark, pipeline_df):
     # unparsed garbage rows survive grep only via the "null" include pattern
     evs = _oracle_events()
     assert sum(r["rows_in"] - r["rows_dropped"] for r in m.values()) == len(evs)
+    # rows_routed counts (row, sink) pairs: exactly the oracle's fan-out
+    want: dict = {}
+    for routed in oracle.route(evs, {s.name: s.match for s in SINKS}).values():
+        for ev in routed:
+            want[ev.source] = want.get(ev.source, 0) + 1
+    assert {src: r["rows_routed"] for src, r in m.items() if r["rows_routed"]} == want
 
 
 def test_static_field_merge_overwrites(spark):

@@ -309,3 +309,16 @@ def test_frame_sample_zero_shuffle_plan(spark):
     # exactly two kernels: synth_media's builder + the frame decoder
     assert plan.count("MapInPandas") == 2
     assert "Generate explode" in plan and "element_at" in plan
+
+
+def test_ann_ivfpq_topk_plan_has_no_python_eval(spark):
+    """The IVF assignment and hot-bucket seed distances use the JVM int_dot
+    fold: the executed (AQE-final) plan of the IVF-PQ search crosses no
+    Python boundary for a per-row scalar UDF."""
+    import __spark_entry__ as entry_mod
+
+    df = entry_mod.queries()["ann_ivfpq_topk"](spark, "/root/testdata/sf0.001")
+    df.collect()
+    plan = plan_of(df)
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan

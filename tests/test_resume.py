@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from go_log_forwarder_spark.functions.filters import GrepFilter
 from go_log_forwarder_spark.functions.parsers import JsonParser, ParserChain
 from go_log_forwarder_spark.operators.routing import SinkSpec
-from go_log_forwarder_spark.plans.lineage import ResumablePipeline, TableLineageStore
+from go_log_forwarder_spark.plans.lineage import ResumablePipeline
 from go_log_forwarder_spark.sources.storage import ParquetSnapshotStore
 
 SINKS = [SinkSpec("all", "*"), SinkSpec("err", "evt-err*")]
@@ -44,29 +44,20 @@ def _totals(spark, workdir):
     return out
 
 
-def _mk_rp(spark, workdir, store_kind):
-    lineage = (
-        TableLineageStore(spark, workdir + "_lineage_tbl")
-        if store_kind == "table"
-        else None
-    )
-    return ResumablePipeline(workdir, SINKS, lineage=lineage)
-
-
-@pytest.mark.parametrize("store_kind", ["json", "table"])
+@pytest.mark.parametrize("store_kind", ["json"])
 def test_clean_vs_crash_resume(spark, tmp_path, store_kind):
     inp = str(tmp_path / "input")
     _write_input(spark, inp)
 
     # clean single run
     clean_dir = str(tmp_path / "clean")
-    rp = _mk_rp(spark, clean_dir, store_kind)
+    rp = ResumablePipeline(clean_dir, SINKS)
     res = rp.run(spark, inp, _pipeline_fn, run_id="r1")
     assert res["processed"] == 8 and res["skipped"] == 0
 
     # crashed run: lineage committed for only 3 units, then failure
     crash_dir = str(tmp_path / "crash")
-    rp2 = _mk_rp(spark, crash_dir, store_kind)
+    rp2 = ResumablePipeline(crash_dir, SINKS)
     with pytest.raises(RuntimeError, match="injected failure"):
         rp2.run(spark, inp, _pipeline_fn, run_id="r1", fail_after_units=3)
     assert len(rp2.lineage.committed("r1")) == 3
@@ -141,7 +132,7 @@ def _replace_unit_smaller(spark, unit_uri, tmp_path):
         os.remove(crc)
 
 
-@pytest.mark.parametrize("store_kind", ["json", "table"])
+@pytest.mark.parametrize("store_kind", ["json"])
 def test_truncated_unit_reprocessed_once(spark, tmp_path, store_kind):
     # S3 truncation parity: a committed unit whose file shrank is
     # invalidated and reprocessed exactly once; its sink output is REPLACED
@@ -149,7 +140,7 @@ def test_truncated_unit_reprocessed_once(spark, tmp_path, store_kind):
     inp = str(tmp_path / "input3")
     _write_input(spark, inp, n=200, files=4)
     wd = str(tmp_path / "wd3")
-    rp = _mk_rp(spark, wd, store_kind)
+    rp = ResumablePipeline(wd, SINKS)
     assert rp.run(spark, inp, _pipeline_fn, run_id="t1")["processed"] == 4
 
     unit = rp.list_units(spark, inp)[1]
@@ -160,14 +151,14 @@ def test_truncated_unit_reprocessed_once(spark, tmp_path, store_kind):
 
     # outputs equal a clean run over the CURRENT (post-truncation) input
     clean = str(tmp_path / "clean3")
-    _mk_rp(spark, clean, store_kind).run(spark, inp, _pipeline_fn, run_id="t1")
+    ResumablePipeline(clean, SINKS).run(spark, inp, _pipeline_fn, run_id="t1")
     assert _totals(spark, wd) == _totals(spark, clean)
 
     # stable afterwards: nothing reprocesses
     assert rp.run(spark, inp, _pipeline_fn, run_id="t1")["processed"] == 0
 
 
-@pytest.mark.parametrize("store_kind", ["json", "table"])
+@pytest.mark.parametrize("store_kind", ["json"])
 def test_replaced_or_grown_unit_reprocessed(spark, tmp_path, store_kind):
     # replacement detection beyond shrinks: a committed unit whose file GREW
     # (append/rotation landing a bigger file) must also invalidate — size
@@ -180,7 +171,7 @@ def test_replaced_or_grown_unit_reprocessed(spark, tmp_path, store_kind):
     inp = str(tmp_path / "input4")
     _write_input(spark, inp, n=100, files=4)
     wd = str(tmp_path / "wd4")
-    rp = _mk_rp(spark, wd, store_kind)
+    rp = ResumablePipeline(wd, SINKS)
     assert rp.run(spark, inp, _pipeline_fn, run_id="g1")["processed"] == 4
 
     # replace one unit with a BIGGER file (more rows, same schema)
@@ -199,7 +190,7 @@ def test_replaced_or_grown_unit_reprocessed(spark, tmp_path, store_kind):
     assert res["processed"] == 1 and res["skipped"] == 3
     # matches a clean run over the current input; stable afterwards
     clean = str(tmp_path / "clean4")
-    _mk_rp(spark, clean, store_kind).run(spark, inp, _pipeline_fn, run_id="g1")
+    ResumablePipeline(clean, SINKS).run(spark, inp, _pipeline_fn, run_id="g1")
     assert _totals(spark, wd) == _totals(spark, clean)
     assert rp.run(spark, inp, _pipeline_fn, run_id="g1")["processed"] == 0
 
