@@ -2307,5 +2307,5 @@ def oracle_sql() -> dict[str, str]:
 if __name__ == "__main__":
     from go_log_forwarder_spark.session import get_spark
 
-    df = entry(get_spark(master="local[8]"))
+    df = entry(get_spark())
     df.show()

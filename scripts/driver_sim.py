@@ -43,7 +43,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from go_log_forwarder_spark.session import get_spark
 
-    spark = get_spark(app_name="driver_sim", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="driver_sim")
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")

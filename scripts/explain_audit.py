@@ -41,7 +41,7 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from go_log_forwarder_spark.session import get_spark
 
-    spark = get_spark(app_name="explain_audit", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="explain_audit")
     qs = entry_mod.queries()
     out = [
         "# PLANS — physical-plan audit of the flagship queries",

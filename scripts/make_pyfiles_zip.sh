@@ -9,8 +9,10 @@
 #       your_job.py
 #
 # The library is pure Python (pandas UDFs + Catalyst expressions) — no jars
-# beyond stock Spark; add iceberg-spark-runtime via --packages to switch the
-# storage layer to real Iceberg (sources/storage.py picks it up).
+# beyond stock Spark. get_spark() runs the Python workers under the
+# go_log_forwarder_spark.pyworker daemon, which starts before --py-files reach
+# sys.path: on standalone or Kubernetes also install the package in the
+# executor image or put it on spark.executorEnv.PYTHONPATH.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 out="${1:-dist/go_log_forwarder_spark.zip}"
