@@ -1648,7 +1648,7 @@ def q_resume_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pf(df):
         parsed = ParserChain([JsonParser()]).apply(df)
-        return parsed, GREP.apply(parsed)
+        return parsed, GREP.keep_pred()
 
     rp = ResumablePipeline(f"{tmp}/wd", SINKS)
     try:

@@ -33,6 +33,8 @@ Divergences (documented, perf-motivated):
 - The reference recompiles every regex per event (grep.go:74,90) and
   re-marshals the map once per pattern (grep.go:79,95); we compile patterns
   at build time and serialize once per row inside Catalyst.
+- Patterns are validated with RE2 (Go's syntax) at build time, but rows are
+  matched by Spark's ``rlike`` (java.util.regex).
 - Go's json.Marshal HTML-escapes ``< > &`` (to \\u003c etc); we do not.
   None of the reference tests exercise those characters.
 """
@@ -42,6 +44,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -105,10 +109,12 @@ class GrepFilter:
             raise ValueError(f"unsupported logic operator {self.op!r} in grep filter")
         if not self.include and not self.exclude:
             raise ValueError("no exclude or include regex pattern provided for the grep filter")
-        import re as _re
-
+        # build-time validation with RE2, Go's regexp syntax: what Go's
+        # regexp.Compile rejects (lookaround, backreferences) raises here.
+        # The array must be non-empty: pyarrow 16 skips compiling the
+        # pattern for an empty input.
         for p in (*self.include, *self.exclude):
-            _re.compile(p)  # build-time validation (divergence noted above)
+            pc.match_substring_regex(pa.array([""]), pattern=p)
 
     def keep_col(self, target: Column) -> Column:
         """Predicate: True = event survives this filter."""

@@ -4,8 +4,9 @@ The reference's ONLY aggregate is the counter output
 (``internal/output/counter/counter.go:39-62``): a per-sink running count of
 tag-matched events. The implicit second aggregate is the per-input line
 accounting (tail.go:449, http.go:134-149). The north rule widens these to
-per-sink / per-source counts and per-partition pipeline metrics
-(rows_in / rows_parsed / rows_dropped / rows_routed).
+per-sink / per-source counts and pipeline metrics (rows_in / rows_parsed /
+rows_dropped / rows_routed) per source, or per input unit for the resumable
+runner (plans/lineage.py).
 """
 
 from __future__ import annotations
@@ -60,21 +61,6 @@ def per_sink_source_counts(
         got.select("source", F.expr(_stack_expr(sinks)))
         .filter(F.col("n") > 0)
         .select("sink_name", "source", "n")
-    )
-
-
-def per_partition_metrics(parsed_df: DataFrame, run_id: str = "run") -> DataFrame:
-    """A2 (north rule): per-PHYSICAL-partition accounting — rows_in /
-    rows_parsed per spark_partition_id, the executor-granular twin of the
-    per-unit lineage metrics (plans/lineage.py). One map-side pass +
-    one tiny shuffle over (partition_id) rows."""
-    return (
-        parsed_df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(F.when(F.col("parsed").isNotNull(), 1).otherwise(0)).alias("rows_parsed"),
-        )
-        .withColumn("run_id", F.lit(run_id))
     )
 
 

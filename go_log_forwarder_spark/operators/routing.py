@@ -26,7 +26,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.tags import CompiledTagPattern, compile_tag_pattern
 
@@ -64,7 +63,6 @@ def fan_out_writes(
     sinks: list[SinkSpec],
     write_fn,
     tag_col: str = "tag",
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> dict[str, int]:
     """Compute the pipeline once, write each sink's filtered view.
 
@@ -77,7 +75,7 @@ def fan_out_writes(
     """
     from pyspark.sql import Observation
 
-    df = df.persist(storage_level)
+    df = df.persist()
     try:
         counts: dict[str, int] = {}
         for s in sinks:

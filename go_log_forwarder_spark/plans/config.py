@@ -83,7 +83,11 @@ PARSER_BUILDERS = {
 
 def register_parser(type_name: str, builder) -> None:
     """Add a parser plugin: ``builder(cfg_dict, common_kwargs) -> parser``
-    (the ParserRegistry analog, config.go:186-200)."""
+    (the ParserRegistry analog, config.go:186-200). The parser exposes
+    ``name``, ``time_key``, ``time_format`` and ``parse(raw: Column) ->
+    (matched, parsed, canonical)`` Columns: the match flag, the
+    map<string,string> parse result and its Go ``json.Marshal`` text
+    (see functions/parsers.py)."""
     PARSER_BUILDERS[type_name.lower()] = builder
 
 

@@ -29,10 +29,11 @@ import uuid
 from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.routing import SinkSpec
+from ..operators.aggregate import pipeline_metrics
+from ..operators.routing import SinkSpec, fan_out_writes
 
 UNIT_COL = "_unit"
 
@@ -122,8 +123,9 @@ class LineageStore:
 class ResumablePipeline:
     """Exactly-once resumable pipeline runner over file-unit granules.
 
-    ``pipeline_fn(df) -> (parsed_df, kept_df)`` is the parse+filter stage;
-    sinks receive ``kept_df`` rows whose tag matches their pattern.
+    ``pipeline_fn(df) -> (parsed_df, keep_pred)`` is the parse stage and
+    the filter chain's keep predicate (``GrepFilter.keep_pred()``); sinks
+    receive the kept rows whose tag matches their pattern.
     """
 
     def __init__(self, work_dir: str, sinks: list[SinkSpec]):
@@ -145,7 +147,7 @@ class ResumablePipeline:
         self,
         spark: SparkSession,
         input_path: str,
-        pipeline_fn: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
+        pipeline_fn: Callable[[DataFrame], tuple[DataFrame, Column]],
         run_id: str,
         fail_after_units: int | None = None,
         max_units_per_batch: int | None = None,
@@ -191,57 +193,38 @@ class ResumablePipeline:
 
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         df = spark.read.parquet(*todo).withColumn(UNIT_COL, F.input_file_name())
-        parsed, kept = pipeline_fn(df)
+        parsed, keep_pred = pipeline_fn(df)
+
+        def write(s: SinkSpec, sink_df: DataFrame) -> None:
+            sink_df.write.mode("overwrite").partitionBy(UNIT_COL).parquet(self._sink_dir(s))
+
         parsed = parsed.persist()
-        kept = kept.persist()
         try:
-            for s in self.sinks:
-                sdf = kept.filter(s.compiled.column(F.col("tag")))
-                (
-                    sdf.write.mode("overwrite")
-                    .partitionBy(UNIT_COL)
-                    .parquet(self._sink_dir(s))
-                )
-            # per-unit metrics (A2): rows in/parsed/dropped/routed — ONE
-            # aggregation job over the persisted frames (routed counts are
-            # per-sink conditional sums, not a second pass per sink; the
-            # old shape ran 3 collects + one count per sink).
-            in_stats = parsed.groupBy(UNIT_COL).agg(
-                F.count(F.lit(1)).alias("rows_in"),
-                F.sum(F.when(F.col("parsed").isNotNull(), 1).otherwise(0)).alias(
-                    "rows_parsed"
-                ),
-            )
-            routed_expr = None
-            for s in self.sinks:
-                term = F.sum(s.compiled.column(F.col("tag")).cast("long"))
-                routed_expr = term if routed_expr is None else routed_expr + term
-            kept_stats = kept.groupBy(UNIT_COL).agg(
-                F.count(F.lit(1)).alias("rows_kept"),
-                routed_expr.alias("rows_routed"),
-            )
+            fan_out_writes(parsed.filter(keep_pred), self.sinks, write)
+            # per-unit metrics (A2): the pipeline_metrics math, keyed by unit
             stats = {
-                r[UNIT_COL]: r
-                for r in in_stats.join(kept_stats, UNIT_COL, "left").collect()
+                r[UNIT_COL]: r.asDict()
+                for r in pipeline_metrics(
+                    parsed, keep_pred, self.sinks, key_col=UNIT_COL
+                ).collect()
             }
         finally:
             parsed.unpersist()
-            kept.unpersist()
 
         records = []
         for i, u in enumerate(todo):
             if fail_after_units is not None and i >= fail_after_units:
                 # simulated crash: sink data written, lineage NOT committed
                 raise RuntimeError(f"injected failure before committing {u}")
-            st = stats.get(u)
+            st = stats.get(u, {})
             records.append(
                 {
                     "run_id": run_id,
                     "unit": u,
-                    "rows_in": st["rows_in"] if st else 0,
-                    "rows_parsed": st["rows_parsed"] if st else 0,
-                    "rows_dropped": (st["rows_in"] - (st["rows_kept"] or 0)) if st else 0,
-                    "rows_routed": (st["rows_routed"] or 0) if st else 0,
+                    **{
+                        k: st.get(k, 0)
+                        for k in ("rows_in", "rows_parsed", "rows_dropped", "rows_routed")
+                    },
                     "status": "committed",
                     "committed_at": time.time(),
                     "unit_size": unit_size(u),

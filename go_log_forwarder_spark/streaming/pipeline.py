@@ -26,7 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.routing import SinkSpec
+from ..operators.routing import SinkSpec, fan_out_writes
 
 
 def stream_events(
@@ -50,7 +50,8 @@ def run_foreach_batch(
     shed_per_source: int | None = None,
 ):
     """engine.go:137-143 fan-out per micro-batch: the batch pipeline_fn runs
-    unchanged inside foreachBatch; each sink appends its tag-filtered view.
+    unchanged inside foreachBatch, and :func:`fan_out_writes` writes each
+    sink's tag-filtered view of it (one persist, one write per sink).
     ``shed_per_source`` opts into :func:`shed_load` BEFORE the pipeline
     (the reference sheds at the input edge, tcp.go:199-205).
 
@@ -61,17 +62,13 @@ def run_foreach_batch(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if shed_per_source is not None:
             batch_df = shed_load(batch_df, max_per_source=shed_per_source)
-        kept = pipeline_fn(batch_df)
-        kept = kept.persist()
-        try:
-            for s in sinks:
-                (
-                    kept.filter(s.compiled.column(F.col(tag_col)))
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(out_dir, s.name, f"batch={batch_id}"))
-                )
-        finally:
-            kept.unpersist()
+
+        def write(s: SinkSpec, sink_df: DataFrame) -> None:
+            sink_df.write.mode("overwrite").parquet(
+                os.path.join(out_dir, s.name, f"batch={batch_id}")
+            )
+
+        fan_out_writes(pipeline_fn(batch_df), sinks, write, tag_col)
 
     return (
         stream_df.writeStream.foreachBatch(process_batch)

@@ -19,7 +19,7 @@ ev.select(F.col("props").alias("raw"),
 SINKS = [SinkSpec("all", "*"), SinkSpec("err", "evt-err*")]
 def pf(df):
     parsed = ParserChain([JsonParser()]).apply(df)
-    return parsed, GrepFilter(op="and", include=('"k":[0-9]+}',)).apply(parsed)
+    return parsed, GrepFilter(op="and", include=('"k":[0-9]+}',)).keep_pred()
 
 rp = ResumablePipeline(os.path.join(tmp, "wd"), SINKS)
 try:

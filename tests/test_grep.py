@@ -150,3 +150,14 @@ def test_grep_after_json_parse_end_to_end(spark):
             expect.add(raw)
     assert kept == expect
     assert raws[0] in kept and raws[1] in kept and raws[2] not in kept
+
+
+def test_patterns_validated_with_re2(spark):
+    # Go syntax builds (\p{L}: Python re rejects it); rows are still
+    # matched by rlike
+    g = GrepFilter(op="and", include=(r'"\p{L}+"',))
+    df = spark.createDataFrame([('{"w":"héllo"}', "t"), ("null", "t")], "canonical string, tag string")
+    assert [r["canonical"] for r in g.apply(df).collect()] == ['{"w":"héllo"}']
+    # what Go's regexp.Compile rejects fails at build
+    with pytest.raises(Exception):
+        GrepFilter(op="and", include=(r"x(?=y)",))

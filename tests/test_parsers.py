@@ -378,29 +378,60 @@ def test_go_layout_compiler_roundtrip(spark):
 
 
 def test_regex_ascii_classes_kernel_independent(spark):
-    # ADVICE r3: \d must be ASCII-only (RE2/Go semantics) in BOTH kernels.
-    # Arabic-Indic digits must not match, whichever kernel runs.
-    from go_log_forwarder_spark.functions.parsers import (
-        RegexParser,
-        _compile_regex_parse_udf,
-        _re2_extractable,
-    )
-
+    # ADVICE r3: \d must be ASCII-only (RE2/Go semantics): Arabic-Indic
+    # digits must not match on the one regex kernel.
     pat = r"n=(?P<n>\d+)"
-    rows = [("n=42",), ("n=١٢٣",)]  # ١٢٣
-    df = spark.createDataFrame(rows, "raw string")
+    rows = _run_chain(spark, ["n=42", "n=١٢٣"], [RegexParser(pattern=pat)])  # ١٢٣
+    assert {k: r["parsed"] for k, r in rows.items()} == {"n=42": {"n": "42"}, "n=١٢٣": None}
 
-    assert _re2_extractable(pat, ["n"])  # default route is the RE2 kernel
-    re2 = {
-        r["raw"]: r["p"]
-        for r in df.select(
-            "raw", RegexParser(pattern=pat).parsed_col(F.col("raw")).alias("p")
-        ).collect()
-    }
-    fallback = {
-        r["raw"]: r["p"]
-        for r in df.select(
-            "raw", _compile_regex_parse_udf(pat, allow_empty=True)(F.col("raw")).alias("p")
-        ).collect()
-    }
-    assert re2 == fallback == {"n=42": {"n": "42"}, "n=١٢٣": None}
+
+# --- RE2 syntax (Go's regexp) on the one kernel ---------------------------
+
+
+def test_regex_unicode_property_class(spark):
+    # \p{L} is Go syntax; Python re rejects it ("bad escape \p")
+    rows = _run_chain(spark, ["héllo wörld"], [RegexParser(pattern=r"(?P<w>\p{L}+)")])
+    assert rows["héllo wörld"]["parsed"] == {"w": "héllo"}
+    assert rows["héllo wörld"]["canonical"] == '{"w":"héllo"}'
+
+
+def test_regex_unnamed_groups_ignored(spark):
+    # Go compiles unnamed groups and ignores them (regex.go:64-79)
+    pat = r"(\d+)-(?P<n>\d+)"
+    rows = _run_chain(spark, ["12-34", "x"], [RegexParser(pattern=pat)])
+    assert rows["12-34"]["parsed"] == {"n": "34"}
+    assert rows["x"]["parsed"] is None
+    ev = oracle.Event(raw="12-34")
+    assert oracle.regex_parse(ev, pat) and ev.parsed == {"n": "34"}
+
+
+def test_regex_without_named_groups_matches_empty(spark):
+    rows = _run_chain(spark, ["INFO x", "WARN y"], [RegexParser(pattern="^INFO")])
+    assert rows["INFO x"]["parser"] == "regex"
+    assert rows["INFO x"]["parsed"] == {}
+    assert rows["INFO x"]["canonical"] == "{}"
+    assert rows["WARN y"]["parser"] is None
+
+
+def test_regex_rejects_what_go_rejects():
+    # lookahead: Go's regexp.Compile fails, so Init fails (regex.go:32-35)
+    with pytest.raises(Exception):
+        RegexParser(pattern=r"(?P<a>x)(?=y)")
+
+
+@pytest.mark.parametrize(
+    "pattern,expected",
+    [
+        (r"(a)(?P<b>b)", r"(?:a)(?P<b>b)"),
+        (r"\((?P<a>x)\)", r"\((?P<a>x)\)"),
+        (r"[(](?P<a>[^)(]+)[)]", r"[(](?P<a>[^)(]+)[)]"),
+        (r"[](](?P<a>x)", r"[](](?P<a>x)"),
+        (r"[[:alpha:](](x)", r"[[:alpha:](](?:x)"),
+        (r"\Q(\E(x)", r"\Q(\E(?:x)"),
+        (r"(?i)((?:a)|b)", r"(?i)(?:(?:a)|b)"),
+    ],
+)
+def test_unnamed_group_rewrite(pattern, expected):
+    from go_log_forwarder_spark.functions.parsers import _named_groups_only
+
+    assert _named_groups_only(pattern) == expected

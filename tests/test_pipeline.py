@@ -155,16 +155,6 @@ def test_broadcast_enrich_left_join(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_per_partition_metrics(spark, pipeline_df):
-    from go_log_forwarder_spark.operators.aggregate import per_partition_metrics
-
-    parsed, _ = pipeline_df
-    m = per_partition_metrics(parsed, run_id="r").collect()
-    assert sum(r["rows_in"] for r in m) == 300
-    assert all(r["rows_parsed"] <= r["rows_in"] for r in m)
-    assert len(m) >= 1 and all(r["run_id"] == "r" for r in m)
-
-
 def test_fan_out_writes_one_job_per_sink(spark, tmp_path):
     # counts come from Observation metrics folded into the write job itself:
     # exactly ONE Spark job per sink, never a second counting pass.

@@ -31,8 +31,7 @@ def _write_input(spark, path, n=400, files=8):
 
 def _pipeline_fn(df):
     parsed = ParserChain([JsonParser()]).apply(df)
-    kept = GrepFilter(op="and", include=('"k":[0-9]*[02468]}|null',)).apply(parsed)
-    return parsed, kept
+    return parsed, GrepFilter(op="and", include=('"k":[0-9]*[02468]}|null',)).keep_pred()
 
 
 def _totals(spark, workdir):

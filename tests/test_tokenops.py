@@ -133,11 +133,13 @@ def test_with_distinct_count_parity(spark, toks_df):
     assert got[1] == 3 and got[4] == 0 and got[6] == 4
 
 
-def test_fused_regex_canonical_parity(spark):
-    # r7: the RE2 kernel's in-kernel canonical must equal the Catalyst
-    # map-marshal (filters.canonical_json_of_string_map) byte-for-byte —
-    # multiple groups (quote between entries!), escapes, empty values,
-    # no-match rows.
+@pytest.mark.parametrize("allow_empty", [True, False])
+def test_fused_regex_canonical_parity(spark, allow_empty):
+    # The RE2 kernel's in-kernel canonical must equal the Catalyst
+    # map-marshal (filters.canonical_json_of_string_map) of the parsed map
+    # byte-for-byte — multiple groups (quote between entries!), escapes,
+    # empty values (dropped when allow_empty is off, the first sorted key
+    # included), no-match rows.
     import datetime
 
     from go_log_forwarder_spark.functions.filters import canonical_json_of_string_map
@@ -147,25 +149,35 @@ def test_fused_regex_canonical_parity(spark):
         ('ERROR event "quoted"\\slash', 1),
         ("INFO x", 2),
         ("~~no match~~", 3),
-        ("WARN ", 4),  # .+ fails on empty message -> no match
+        ("WARN ", 4),  # empty message
+        (" lone message", 5),  # empty level: the first key in sorted order
+        (" ", 6),  # every group empty
+        ("ERROR a\tb\rc", 7),
     ]
     df = spark.createDataFrame(
         [(r, i, datetime.datetime(2024, 1, 1)) for r, i in rows],
         "raw string, i long, ingest_time timestamp",
     )
-    p = RegexParser(pattern=r"^(?P<level>[A-Z]+)\s(?P<message>.*)$")
+    p = RegexParser(pattern=r"^(?P<level>[A-Z]*)\s(?P<message>.*)$", allow_empty=allow_empty)
     out = ParserChain([p]).apply(df)
     got = {
-        r["i"]: (r["canonical"], canonical_json_of_string_map(F.lit(None)))
-        for r in out.collect()
-    }
-    jvm = {
-        r["i"]: r["c"]
+        r["i"]: (r["canonical"], r["c"])
         for r in out.select(
-            "i", F.coalesce(canonical_json_of_string_map(F.col("parsed")), F.lit("null")).alias("c")
+            "i",
+            "canonical",
+            F.coalesce(canonical_json_of_string_map(F.col("parsed")), F.lit("null")).alias("c"),
         ).collect()
     }
-    assert {i: c for i, (c, _) in got.items()} == jvm
-    assert jvm[1] == '{"level":"ERROR","message":"event \\"quoted\\"\\\\slash"}'
-    assert jvm[3] == "null"
+    kernel = {i: k for i, (k, _) in got.items()}
+    assert kernel == {i: c for i, (_, c) in got.items()}
+    assert kernel[1] == '{"level":"ERROR","message":"event \\"quoted\\"\\\\slash"}'
+    assert kernel[3] == "null"
+    assert kernel[7] == '{"level":"ERROR","message":"a\\tb\\rc"}'
+    if allow_empty:
+        assert kernel[5] == '{"level":"","message":"lone message"}'
+        assert kernel[6] == '{"level":"","message":""}'
+    else:
+        assert kernel[4] == '{"level":"WARN"}'
+        assert kernel[5] == '{"message":"lone message"}'
+        assert kernel[6] == "{}"
 
